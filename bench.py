@@ -708,16 +708,16 @@ def stream_throughput(spark, seconds: float = 8.0) -> dict:
         "PATTERN (A B{1,2} C)->noop(update); the quantified floor"
     )
     # the unroll runs ~10 stateful operators (4 + 6 across the two
-    # branches); with the session's 32 shuffle partitions that is
-    # ~320 HDFS-state-store commits per batch — pure fixed cost that
-    # dwarfs the 400k-row data path. 8 partitions is the honest
-    # sizing for this state-op count at this batch size (a real
-    # deployment sizes state partitions to state volume, not to the
-    # scan parallelism default), measured 163k vs ~0 completed
-    # batches at 32.
+    # branches); at 32 shuffle partitions that is ~320 HDFS-state-store
+    # commits per batch — pure fixed cost that dwarfs the 400k-row
+    # data path. 8 partitions is the honest sizing for this state-op
+    # count at this batch size (a real deployment sizes state
+    # partitions to state volume, not to the scan parallelism
+    # default), measured 163k vs ~0 completed batches at 32. The
+    # override only ever lowers the session's count (one per core).
     shuf = "spark.sql.shuffle.partitions"
     prev_shuf = spark.conf.get(shuf)
-    spark.conf.set(shuf, "8")
+    spark.conf.set(shuf, str(min(8, int(prev_shuf))))
     try:
         mrq_j = match_recognize_stream(
             mrq_src(400_000, 100_000), mrq_clause

@@ -6,11 +6,21 @@ these configs — every query is written to be timezone- and
 config-independent. ``configure_session`` applies the few runtime-safe
 settings we do need (notably reading nanosecond parquet timestamps).
 
-Scale posture (SURVEY.md §4.2 / K6): AQE enabled for runtime
-re-planning (skew-join splitting, partition coalescing), shuffle
-partitions sized for the local harness but overridable via env for a
-real cluster, Arrow enabled so the few pandas-UDF operators use
-vectorized transfer.
+Scale posture (SURVEY.md §4.2 / K6): AQE (on by default in Spark 4)
+re-plans batch queries at runtime (skew-join splitting, partition
+coalescing), Arrow is enabled so the few pandas-UDF operators use
+vectorized transfer, and shuffle partitions default to the session's
+cores. The last is for streaming: AQE cannot coalesce a stateful
+streaming exchange and the state partition count is pinned in the
+checkpoint at first start, so each partition is one Python task and
+one state-store commit on every trigger for the life of the stream.
+A Python task has a fixed cost: pyspark's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``,
+which on Python 3.11 re-reads the directory of every zip importer on
+``sys.path`` (on a 4-vCPU host: 16-17 importers, ``pyspark.zip``'s
+1,328 entries through 11-12 of them and the spark-core jar's 5,359
+through 2, 140-215 ms of CPU per task). SCALING.md ("Cluster session")
+has the measured effect on a stateful micro-batch.
 """
 
 from __future__ import annotations
@@ -79,48 +89,32 @@ def get_spark(
 ) -> SparkSession:
     """Build the engine's own session (tests, bench, CLI use).
 
-    - ``local[$SPARK_GRAFT_CPUS]`` by default; a real deployment passes
-      a cluster master and sizes shuffle partitions to ~2-3x total
-      cores (at 100 TB: thousands, or rely on AQE coalescing from a
-      high initial count).
+    - ``local[$SPARK_GRAFT_CPUS]`` by default (all cores when unset).
+    - ``spark.sql.shuffle.partitions`` defaults to the context's
+      ``defaultParallelism`` (N for ``local[N]``, total executor cores
+      on a cluster), not a fixed count. Batch exchanges barely care,
+      since AQE coalesces them, but a stateful streaming exchange is
+      never coalesced and its partition count is pinned in the
+      checkpoint at first start: each extra partition costs one Python
+      task and one state-store commit on every trigger. Pass
+      ``shuffle_partitions`` to size state to its volume instead (an
+      existing checkpoint keeps its original count either way).
     - UTC session timezone: queries themselves are tz-independent, but
       UTC keeps any ad-hoc exploration deterministic.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    # AQE partition-coalescing posture (guide §2.2): with
-    # ``parallelismFirst=true`` (Spark's default) tiny shuffles keep
-    # full parallelism — at local[32] over MB-scale inputs that is 32
-    # near-empty tasks per exchange, pure scheduling overhead; Spark's
-    # own docs recommend ``false`` (respect the advisory partition
-    # size) on busy clusters. Both knobs stay env-tunable so a real
-    # deployment sizes them to its data volume (e.g. advisory 256m at
-    # 100 TB); the defaults here are measured A/B on the bench corpus
-    # (see OPTIMIZATION_r11.md).
-    parallelism_first = os.environ.get(
-        "SPARK_GRAFT_COALESCE_PARALLELISM_FIRST", "true"
-    )
-    advisory = os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m")
-    builder = (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            parallelism_first,
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return configure_session(spark)

@@ -212,60 +212,6 @@ def sequence_matches_join(
     return cur.withColumnRenamed("__k0", key_col)
 
 
-def funnel_conversions_tws(events: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` spelling of the same
-    funnel (the successor API to applyInPandasWithState: explicit
-    StatefulProcessor with named state and timer support — the closest
-    Spark analogue of a Flink KeyedProcessFunction).
-
-    Runtime dependency: the TWS protocol needs ``google.protobuf``
-    (absent in this container — the equivalence test skips itself);
-    ``funnel_conversions`` is the dependency-free twin."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FunnelProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._views = handle.getValueState("views", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            views = list(self._views.get()[0]) if self._views.exists() else []
-            out_ts = []
-            for pdf in rows:
-                pdf = pdf.sort_values("ts")
-                for ts, etype in zip(pdf["ts"], pdf["event_type"]):
-                    sec = ts.timestamp()
-                    if etype == "view":
-                        views.append(sec)
-                    elif etype == "purchase":
-                        views = [v for v in views if sec - v <= _HORIZON_S]
-                        if any(v < sec for v in views):
-                            out_ts.append(ts)
-            if views:
-                floor = max(views) - _HORIZON_S
-                views = [v for v in views if v >= floor]
-            self._views.update((views,))
-            if out_ts:
-                yield pd.DataFrame({"user_id": user_id, "purchase_ts": out_ts})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "event_type")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            FunnelProcessor(),
-            outputStructType=FUNNEL_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 _NEG_STATE_SCHEMA = "views array<double>, clicks array<double>"
 
 

@@ -43,12 +43,6 @@ def _build_spark() -> SparkSession:
         SparkSession.builder.appName("ffs-composed-bench")
         .master(f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # UI on: the status REST API is the shuffle-bytes source
         .config("spark.ui.enabled", "true")
@@ -58,6 +52,11 @@ def _build_spark() -> SparkSession:
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
         .getOrCreate()
+    )
+    # shuffle partitions = cores, as in session.get_spark
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
     )
     return configure_session(spark)
 
